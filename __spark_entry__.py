@@ -6,20 +6,30 @@
 
 from __future__ import annotations
 
+import dataclasses
+import os
 import sys
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
-sys.path.insert(0, "/root/repo")
+# this checkout's own package and fixtures, whatever the cwd
+_ROOT = os.path.dirname(os.path.abspath(__file__))
+_FIXTURES = os.path.join(_ROOT, "tests", "fixtures")
+sys.path.insert(0, _ROOT)
 
 from python_fmask_spark import oracle, pipeline  # noqa: E402
 from python_fmask_spark.dialect import DUCKDB, SPARK  # noqa: E402
 from python_fmask_spark.functions import angles, dedup, geo, inventory, multimodal, relational  # noqa: E402
 from python_fmask_spark.functions import curation, sampling, similarity, text as textfn  # noqa: E402
+from python_fmask_spark.pipeline import SceneSpec  # noqa: E402
 from python_fmask_spark.sources import register_views  # noqa: E402
 
 SF0001 = "/root/testdata/sf0.001"
+
+# the S2 regimes of the shadow-chain rows (pre-04.00 zero offsets)
+_S2 = SceneSpec(sensor="SENTINEL2", s2_offsets=oracle.S2_ZERO_OFFSETS)
+_S2_CDI = dataclasses.replace(_S2, s2_cdi=True)
 
 
 def _s2_fixture_offsets() -> dict[str, int]:
@@ -29,7 +39,7 @@ def _s2_fixture_offsets() -> dict[str, int]:
     (fmask/fmask.py:137-149, fmask/cmdline/sentinel2Stacked.py:318-341)."""
     from python_fmask_spark import sen2meta
     meta = sen2meta.Sen2ZipfileMeta.from_file(
-        "/root/repo/tests/fixtures/MTD_MSIL1C_fixture.xml")
+        os.path.join(_FIXTURES, "MTD_MSIL1C_fixture.xml"))
     return sen2meta.make_ref_offset_dict(meta)
 
 
@@ -39,7 +49,7 @@ def _s2_tile_meta():
     the reference's sentinel2makeAnglesImage.py:95-123 path."""
     from python_fmask_spark import sen2meta
     return sen2meta.Sen2TileMeta.from_file(
-        "/root/repo/tests/fixtures/MTD_TL_fixture.xml")
+        os.path.join(_FIXTURES, "MTD_TL_fixture.xml"))
 
 def _mtl_thermal_calib_sql(d: str) -> str:
     """S5/S6 on the driver board. The SPARK rendering's calibration
@@ -55,7 +65,7 @@ def _mtl_thermal_calib_sql(d: str) -> str:
         infos = {}
         for name in ("modern_l7", "oldest_l7", "oldest_l5"):
             t = mtl.thermal_info_from_mtl(
-                mtl.read_mtl_file(f"/root/repo/tests/fixtures/MTL_{name}.txt"))
+                mtl.read_mtl_file(f"{_FIXTURES}/MTL_{name}.txt"))
             infos[name] = (t.gain, t.offset, t.k1, t.k2)
     else:
         g7 = (17.04 - 0.0) / (255.0 - 1.0)
@@ -358,12 +368,8 @@ def _fmask_final_class_s2_cdi(spark: SparkSession, sf_dir: str
     independent second transcription. pcp_i carries the composed
     pass-1 PCP so the hash sees the CDI effect directly."""
     register_views(spark, sf_dir)
-    out = pipeline.classify(spark, sensor="SENTINEL2",
-                            s2_offsets=oracle.S2_ZERO_OFFSETS,
-                            s2_cdi=True)
-    leaf = pipeline.materialize_pass1(
-        spark, sensor="SENTINEL2", s2_offsets=oracle.S2_ZERO_OFFSETS,
-        s2_cdi=True)
+    out = pipeline.classify(spark, _S2_CDI)
+    leaf = pipeline.materialize_pass1(spark, _S2_CDI)
     p1 = spark.sql(
         f"SELECT cell_id, r, c, cast(pcp as int) AS pcp_i FROM {leaf}")
     return (out.join(p1, ["cell_id", "r", "c"])
@@ -384,17 +390,13 @@ def _fmask_interim_class_s2_cdi(spark: SparkSession, sf_dir: str
     CDI effect itself (66/500 rows differ at sf0.01), not just the
     smoothed final class."""
     register_views(spark, sf_dir)
-    df = pipeline.interim_class_kernel(
-        spark, sensor="SENTINEL2", s2_offsets=oracle.S2_ZERO_OFFSETS,
-        s2_cdi=True)
+    df = pipeline.interim_class_kernel(spark, _S2_CDI)
     # class from the MAJORITY buffer (cloud_m == cloudbuf AND NOT null),
     # matching the S2 interim oracle form (q_fmask_interim_class_s2's
     # CASE uses cloudbuf_flag, not the dilated mask)
     df = df.selectExpr("url", "cell_id", "r", "c",
                        _S2_INTERIM_CLASS_EXPR)
-    leaf = pipeline.materialize_pass1(
-        spark, sensor="SENTINEL2", s2_offsets=oracle.S2_ZERO_OFFSETS,
-        s2_cdi=True)
+    leaf = pipeline.materialize_pass1(spark, _S2_CDI)
     p1 = spark.sql(f"""SELECT cell_id, r, c,
         cast(pcp as int) AS pcp_i,
         cast(clear_land as int) AS clear_land_i FROM {leaf}""")
@@ -428,8 +430,8 @@ def _interim_class_s2_kernel(offs):
     def run(spark: SparkSession, sf_dir: str) -> DataFrame:
         register_views(spark, sf_dir)
         o = offs() if callable(offs) else offs
-        df = pipeline.interim_class_kernel(spark, sensor="SENTINEL2",
-                                           s2_offsets=o)
+        df = pipeline.interim_class_kernel(
+            spark, SceneSpec(sensor="SENTINEL2", s2_offsets=o))
         return df.selectExpr("url", "cell_id", "r", "c",
                              _S2_INTERIM_CLASS_EXPR)
     return run
@@ -472,8 +474,7 @@ def _fmask_final_class_s2(spark: SparkSession, sf_dir: str) -> DataFrame:
     scripts/make_shadow_fixture.py) — green proves the engine's shadow
     chain under sensor dispatch, not just L8."""
     register_views(spark, sf_dir)
-    out = pipeline.classify(spark, sensor="SENTINEL2",
-                            s2_offsets=oracle.S2_ZERO_OFFSETS)
+    out = pipeline.classify(spark, _S2)
     return out.selectExpr("url", "cell_id", "r", "c", "fmask_class",
                           "cloud_id", "cloud_height_du", "text_sha256")
 
@@ -491,13 +492,9 @@ def _fmask_final_class_s2_grid(spark: SparkSession, sf_dir: str
     grid-angle pass-1 leaf) make the hash provably carry the XML grid
     values."""
     register_views(spark, sf_dir)
-    meta = _s2_tile_meta()
-    out = pipeline.classify(spark, sensor="SENTINEL2",
-                            s2_offsets=oracle.S2_ZERO_OFFSETS,
-                            tile_meta=meta)
-    view = pipeline.materialize_pass1(
-        spark, sensor="SENTINEL2", s2_offsets=oracle.S2_ZERO_OFFSETS,
-        tile_meta=meta)
+    spec = dataclasses.replace(_S2, tile_meta=_s2_tile_meta())
+    out = pipeline.classify(spark, spec)
+    view = pipeline.materialize_pass1(spark, spec)
     ang = spark.sql(
         f"""SELECT cell_id, r, c,
               cast(sat_az_cdn as int) AS sat_az_cdn,
@@ -521,7 +518,7 @@ def _fmask_final_class_l47(spark: SparkSession, sf_dir: str) -> DataFrame:
     independent-replay fixture — green proves the third reference
     sensor family end-to-end (L8 and S2 ± CDI are the other two)."""
     register_views(spark, sf_dir)
-    out = pipeline.classify(spark, sensor="LANDSAT47")
+    out = pipeline.classify(spark, SceneSpec(sensor="LANDSAT47"))
     return out.selectExpr("url", "cell_id", "r", "c", "fmask_class",
                           "cloud_id", "cloud_height_du", "text_sha256")
 
@@ -535,8 +532,7 @@ def _fmask_final_class_dist_s2(spark: SparkSession, sf_dir: str
     distributed == whole-cell == independent oracle without thermal."""
     from python_fmask_spark.operators.scene_dist import classify_distributed
     register_views(spark, sf_dir)
-    out = classify_distributed(spark, sensor="SENTINEL2",
-                               s2_offsets=oracle.S2_ZERO_OFFSETS)
+    out = classify_distributed(spark, _S2)
     return out.selectExpr("url", "cell_id", "r", "c", "fmask_class",
                           "cloud_id", "cloud_height_du", "text_sha256")
 
@@ -553,12 +549,8 @@ def _fmask_final_class_dist_s2_cdi(spark: SparkSession, sf_dir: str
     composed-CDI no-thermal regime."""
     from python_fmask_spark.operators.scene_dist import classify_distributed
     register_views(spark, sf_dir)
-    out = classify_distributed(spark, sensor="SENTINEL2",
-                               s2_offsets=oracle.S2_ZERO_OFFSETS,
-                               s2_cdi=True)
-    leaf = pipeline.materialize_pass1(
-        spark, sensor="SENTINEL2", s2_offsets=oracle.S2_ZERO_OFFSETS,
-        s2_cdi=True)
+    out = classify_distributed(spark, _S2_CDI)
+    leaf = pipeline.materialize_pass1(spark, _S2_CDI)
     p1 = spark.sql(
         f"SELECT cell_id, r, c, cast(pcp as int) AS pcp_i FROM {leaf}")
     return (out.join(p1, ["cell_id", "r", "c"])
@@ -577,13 +569,9 @@ def _fmask_final_class_dist_s2_grid(spark: SparkSession, sf_dir: str
     grid values survive the distributed shadow chain unchanged."""
     from python_fmask_spark.operators.scene_dist import classify_distributed
     register_views(spark, sf_dir)
-    meta = _s2_tile_meta()
-    out = classify_distributed(spark, sensor="SENTINEL2",
-                               s2_offsets=oracle.S2_ZERO_OFFSETS,
-                               tile_meta=meta)
-    view = pipeline.materialize_pass1(
-        spark, sensor="SENTINEL2", s2_offsets=oracle.S2_ZERO_OFFSETS,
-        tile_meta=meta)
+    spec = dataclasses.replace(_S2, tile_meta=_s2_tile_meta())
+    out = classify_distributed(spark, spec)
+    view = pipeline.materialize_pass1(spark, spec)
     ang = spark.sql(
         f"""SELECT cell_id, r, c,
               cast(sat_az_cdn as int) AS sat_az_cdn,
@@ -619,9 +607,7 @@ def _fmask_final_class_auto_s2(spark: SparkSession, sf_dir: str
     SAME S2 independent-replay fixture as fmask_final_class_s2 —
     closes the auto x sensor cross product."""
     register_views(spark, sf_dir)
-    out = pipeline.classify_auto(spark, row_threshold=8,
-                                 sensor="SENTINEL2",
-                                 s2_offsets=oracle.S2_ZERO_OFFSETS)
+    out = pipeline.classify_auto(spark, _S2, row_threshold=8)
     return out.selectExpr("url", "cell_id", "r", "c", "fmask_class",
                           "cloud_id", "cloud_height_du", "text_sha256")
 
@@ -992,9 +978,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             ordered[name] = out.pop(name)
     ordered.update(out)  # anything not yet listed keeps build order
     return ordered
-
-
-_FIXTURES = "/root/repo/tests/fixtures"
 
 
 def oracle_sql() -> dict[str, str]:

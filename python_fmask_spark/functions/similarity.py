@@ -296,9 +296,9 @@ WHERE cast(d.dot as double) / (sqrt(na.nrm) * sqrt(nb.nrm)) >= {threshold}"""
 def _rerank_tail_wide(vx_table: str = "vx") -> str:
     """Spark-only: the exact-cosine re-rank over a
     ``cands(query_id, cand_id)`` CTE with ARRAY-kept vectors in
-    ``vx_table`` — one definition so the lsh/ivf/frame renderings
-    cannot drift apart (tie-breaks and rounding must stay in lockstep
-    with the DuckDB oracle)."""
+    ``vx_table`` — one definition so the lsh and ann_ivf_frame
+    renderings cannot drift apart (tie-breaks and rounding must stay in
+    lockstep with the DuckDB oracle)."""
     return f"""ranked AS (
   SELECT d.query_id, d.cand_id,
     cast(round(1000000.0 * d.dot / (sqrt(d.qnrm) * sqrt(d.cnrm)))
@@ -394,79 +394,13 @@ def q_ann_ivf(d: str) -> str:
     the knobs, and both fractions drop sharply on clustered (true
     near-dup) data where neighbors share a centroid. The banded-LSH
     variant (q_ann_lsh) remains the recall-oriented configuration on
-    this fixture."""
+    this fixture.
+
+    This declarative rendering is the DuckDB oracle; Spark runs the
+    same index through ann_ivf_frame (NumPy matmul assignment)."""
     cast_var = "string" if d == SPARK else "varchar"
     ch = md5_slice_int(f"concat('ivf_', cast(vec_id as {cast_var}))",
                        1, 4, d)
-    if d == SPARK:
-        # Array-native rendering (r6): centroid seeding/assignment dots
-        # are aggregate/zip_with over the array-kept vectors (no
-        # dim-index equi-joins, no reassembly GROUP BYs); the Lloyd
-        # group-mean keeps the original per-(cid, i) aggregate (the one
-        # genuinely row-grained step) and packs the refined centroid
-        # back into an array via array_sort(collect_list(struct(i, v)));
-        # probe/assign lists come from ONE pass over the ranked
-        # assignment (the declarative form referenced aranked twice,
-        # executing the whole n x K chain per reference); candidates
-        # explode per-centroid member lists. Values are bit-identical:
-        # same sample predicate, same integer dots, same
-        # floor(avg + 0.5) quantization, same tie-breaks.
-        return f"""
-WITH {_intvec_wide_cte(d)},
-cvx AS (
-  SELECT vec_id AS cid, iv FROM vx WHERE ({ch}) % {IVF_CENTROID_MOD} = 0
-),
-adots0 AS (
-  SELECT v.vec_id, c.cid,
-    aggregate(zip_with(v.iv, c.iv, (x, y) -> x * y),
-              cast(0 as bigint), (acc, x) -> acc + x) AS dp
-  FROM vx v CROSS JOIN cvx c
-),
-assign0 AS (
-  SELECT vec_id, cid FROM (
-    SELECT vec_id, cid,
-      row_number() OVER (PARTITION BY vec_id ORDER BY dp DESC, cid) AS rn
-    FROM adots0) t WHERE rn = 1
-),
-lloyd AS (
-  SELECT a.cid, pe.i,
-    cast(floor(avg(cast(pe.v as double)) + 0.5) as bigint) AS v
-  FROM assign0 a
-  JOIN vx ON vx.vec_id = a.vec_id
-  LATERAL VIEW posexplode(vx.iv) pe AS i, v
-  GROUP BY a.cid, pe.i
-),
-lloyd_wide AS (
-  SELECT cid,
-    transform(array_sort(collect_list(struct(i, v))), s -> s.v) AS civ
-  FROM lloyd GROUP BY cid
-),
-aranked AS (
-  SELECT v.vec_id, l.cid,
-    row_number() OVER (
-      PARTITION BY v.vec_id
-      ORDER BY aggregate(zip_with(v.iv, l.civ, (x, y) -> x * y),
-                         cast(0 as bigint), (acc, x) -> acc + x) DESC,
-               l.cid) AS rn
-  FROM vx v CROSS JOIN lloyd_wide l
-),
-clists AS (
-  SELECT cid,
-    collect_list(case when rn <= {IVF_ASSIGN_REPL} then vec_id end)
-      AS amem,
-    collect_list(case when rn <= {IVF_NPROBE} AND vec_id < {N_QUERIES}
-                 then vec_id end) AS pmem
-  FROM aranked
-  WHERE rn <= {max(IVF_NPROBE, IVF_ASSIGN_REPL)}
-  GROUP BY cid
-),
-cands AS (
-  SELECT DISTINCT query_id, cand_id FROM clists
-  LATERAL VIEW explode(pmem) qe AS query_id
-  LATERAL VIEW explode(amem) ce AS cand_id
-  WHERE query_id <> cand_id
-),
-{_rerank_tail_wide()}"""
     return f"""
 WITH {_intvec_cte(d)},
 cdim AS (
@@ -654,9 +588,11 @@ def ann_ivf_frame(spark):
         .orderBy("cid").collect())
     if not cents:
         # degenerate corpus where the md5 sample selects no centroid:
-        # the declarative rendering handles it (empty cdim -> empty
-        # result) where shape-(0,) matmuls would raise; fall back.
-        return spark.sql(q_ann_ivf(d))
+        # no inverted list, no candidate (the oracle's empty cdim gives
+        # the same empty result); shape-(0,) matmuls would raise
+        return spark.createDataFrame(
+            [], "query_id bigint, cand_id bigint, rank int, "
+                "cosine_micro bigint")
     cids0 = np.array([r.cid for r in cents], dtype=np.int64)
     c0 = np.array([list(r.iv) for r in cents], dtype=np.int64)
     bc0 = spark.sparkContext.broadcast((cids0, c0))

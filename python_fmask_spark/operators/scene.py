@@ -30,27 +30,9 @@ class FmaskParams:
     # setEqn17CloudProbThresh / CLI --cloudprobthreshold knob
     # (fmask/config.py:336-344): paper default 0.2, Zhu's MATLAB
     # later moved to 0.225. Threaded into the pass-2 landthr CTE.
+    # (The Eqn-20 snow floors change pass 1 itself, so they live on
+    # pipeline.SceneSpec, which names the pass-1 leaf.)
     eqn17_cloud_prob_thresh: float = C.EQN17_CLOUD_PROB_THRESH
-    # Eqn-20 snow-test reflectance floors — setEqn20NirSnowThresh /
-    # setEqn20GreenSnowThresh, CLI --nirsnowthreshold /
-    # --greensnowthreshold (fmask/config.py:354-368; applied
-    # fmask/fmask.py:452-453). These change pass 1 itself, so a
-    # non-default value materializes its own pass-1 leaf
-    # (pipeline._snow_skey).
-    nir_snow_thresh: float = C.EQN20_NIR_SNOW_THRESH
-    green_snow_thresh: float = C.EQN20_GREEN_SNOW_THRESH
-
-    def snow_kwargs(self) -> dict:
-        """The Eqn-20 knobs as pipeline kwargs — None when at defaults
-        so the session-cached default pass-1 leaf is shared."""
-        return {
-            "nir_snow_thresh": (
-                None if self.nir_snow_thresh == C.EQN20_NIR_SNOW_THRESH
-                else self.nir_snow_thresh),
-            "green_snow_thresh": (
-                None if self.green_snow_thresh == C.EQN20_GREEN_SNOW_THRESH
-                else self.green_snow_thresh),
-        }
 
     @classmethod
     def strict(cls, **overrides) -> "FmaskParams":
@@ -201,8 +183,6 @@ def classify_scene(pdf: pd.DataFrame, params: FmaskParams = FmaskParams(),
 SCENE_OUT_SCHEMA = ("url string, cell_id string, r int, c int, "
                     "fmask_class int, cloud_id bigint, "
                     "cloud_height_du int, cloud_base_temp_c double")
-
-SCENE_OUT_SCHEMA_WITH_SHA = SCENE_OUT_SCHEMA + ", text_sha256 string"
 
 # --- slim scene exchange -----------------------------------------------
 # The groupBy(cell_id) sort feeding applyInPandas exchanges every field

@@ -43,6 +43,7 @@ numbering.
 from __future__ import annotations
 
 import math
+from typing import TYPE_CHECKING
 
 import numpy as np
 import pandas as pd
@@ -55,6 +56,9 @@ from . import kernels
 from .clumps import label_clumps_distributed
 from .fillminima_dist import fill_minima_distributed
 from .scene import FmaskParams
+
+if TYPE_CHECKING:
+    from ..pipeline import SceneSpec
 
 
 def _sweep_bounds(t_base, t_low, t_high, sun_az, sun_zen, sat_az, sat_zen,
@@ -270,17 +274,14 @@ def _match_band_kernel(left: pd.DataFrame, right: pd.DataFrame
         "r": rr, "c": cc})
 
 
-def classify_distributed(spark: SparkSession, table: str = "documents",
+def classify_distributed(spark: SparkSession, spec: SceneSpec | None = None,
                          params: FmaskParams | None = None,
                          p3: DataFrame | None = None,
                          digests: DataFrame | None = None,
-                         runner=None,
-                         sensor: str = "LANDSAT8",
-                         s2_offsets: dict[str, int] | None = None,
-                         tile_meta=None,
-                         s2_cdi: bool = False) -> DataFrame:
+                         runner=None) -> DataFrame:
     """Full classification with bounded task grains (see module doc).
-    Returns the same schema as pipeline.classify.
+    Takes the same ``spec`` (pipeline.SceneSpec) and returns the same
+    schema as pipeline.classify.
 
     ``p3``/``digests`` override the pass-3 derivation and the
     byte-identity digest side (benchmarks feed a pre-materialized
@@ -297,38 +298,26 @@ def classify_distributed(spark: SparkSession, table: str = "documents",
     (fmask/fmask.py:206-216)."""
     from .. import pipeline, tiling
 
+    spec = spec or pipeline.SceneSpec()
     params = params or FmaskParams()
     ensure_package_on_executors(spark)
-    has_thermal = sensor != "SENTINEL2"
+    has_thermal = spec.sensor != "SENTINEL2"
     external_p3 = p3 is not None
-    # Stage fingerprint folds in EVERYTHING that changes stage results:
-    # the FmaskParams fields (min_cloud_size_px/buffers alter dist_flags
-    # and the finalize), the rendered pass-1 SQL (sensor dispatch,
-    # offsets, derive-formula version), and the session's registered
-    # input identity (per-file mtime/size) — so resuming in the same
-    # workdir after changing params or rewriting the table re-runs
-    # instead of silently reusing stale stage tables. An externally
-    # supplied p3 is fingerprinted by its analyzed plan (deterministic
-    # within a session; conservatively re-runs across sessions, which
-    # is correct — the runner cannot validate a caller-built frame).
+    # pipeline.stage_fingerprint folds in everything that changes stage
+    # results (spec key, FmaskParams fields, registered input identity).
+    # An externally supplied p3 is fingerprinted by its analyzed plan
+    # (deterministic within a session; conservatively re-runs across
+    # sessions, which is correct — the runner cannot validate a
+    # caller-built frame).
     fp = ""
     if runner is not None:
-        import dataclasses
-
-        fp_logic = [f"{table}:{sensor}:distv3:cdi={s2_cdi}",
-                    repr(dataclasses.astuple(params)),
-                    repr(sorted((s2_offsets or {}).items()))]
+        p3_plan = ""
         if external_p3:
             try:
-                fp_logic.append(
-                    p3._jdf.queryExecution().analyzed().toString())
+                p3_plan = p3._jdf.queryExecution().analyzed().toString()
             except Exception:
-                fp_logic.append(p3.schema.json())
-        else:
-            fp_logic.append(pipeline.pass1_sql_text(
-                table, sensor=sensor, s2_offsets=s2_offsets,
-                tile_meta=tile_meta))
-        fp = pipeline.stage_fingerprint(spark, "||".join(fp_logic))
+                p3_plan = p3.schema.json()
+        fp = pipeline.stage_fingerprint(spark, spec, params, p3_plan)
 
     def _mat(stage: str, build):
         """Stage barrier: fingerprinted stage table under a runner,
@@ -340,21 +329,12 @@ def classify_distributed(spark: SparkSession, table: str = "documents",
         return build().localCheckpoint()
 
     if p3 is None:
-        view = pipeline.materialize_pass1(spark, table, runner=runner,
-                                          sensor=sensor,
-                                          s2_offsets=s2_offsets,
-                                          s2_cdi=s2_cdi,
-                                          tile_meta=tile_meta,
-                                          **params.snow_kwargs())
+        view = pipeline.materialize_pass1(spark, spec, runner=runner)
         thr = (None if runner is not None else
-               pipeline.materialize_thresholds(spark, table, sensor=sensor,
-                                               s2_offsets=s2_offsets,
-                                               s2_cdi=s2_cdi,
-                                               tile_meta=tile_meta,
-                                               **params.snow_kwargs()))
+               pipeline.materialize_thresholds(spark, spec))
         cols = ", ".join((*pipeline._KERNEL_COLS, "cell_rows"))
         p3 = _mat("dist_p3", lambda: spark.sql(pipeline.tail_sql_from_pass1(
-            view, "pass3", f"SELECT {cols} FROM pass3", sensor=sensor,
+            view, "pass3", f"SELECT {cols} FROM pass3", sensor=spec.sensor,
             thresholds_view=thr,
             eqn17_cloud_prob_thresh=params.eqn17_cloud_prob_thresh,
             pass1_cols=(*pipeline._KERNEL_P1_COLS, "cell_rows"))))
@@ -631,7 +611,7 @@ def classify_distributed(spark: SparkSession, table: str = "documents",
     ident = p3.select("url", "cell_id", "r", "c")
     if digests is None:
         if external_p3:
-            # p3's urls may be unrelated to `table` (bench/skew feeds a
+            # p3's urls may be unrelated to spec.table (bench/skew feeds a
             # pre-materialized pixel frame, possibly with no registered
             # 'documents' view at all): deriving digests from the table
             # would crash or silently drop rows through the inner url
@@ -642,7 +622,9 @@ def classify_distributed(spark: SparkSession, table: str = "documents",
                                 "cloud_id", "cloud_height_du",
                                 "cloud_base_temp_c",
                                 "cast(null as string) AS text_sha256"))
-        digests = pipeline.text_digests(spark, table)
+        # off the leaf this spec already built (under a runner: the
+        # staged pass-1 table)
+        digests = pipeline._ident(spark, view).select("url", "text_sha256")
     return (out.join(ident, ["cell_id", "r", "c"])
             .join(digests, "url")
             .select("url", "cell_id", "r", "c", "fmask_class", "cloud_id",

@@ -356,8 +356,9 @@ def q_fmask_interim_class_s2_cdi(d: str,
     clear_land, the thresholds histograms, pass 2/3, the majority
     buffer — reads the modified pass 1. DuckDB renders the CDI chain
     as the recursive-CTE SQL form; the Spark engine runs the per-cell
-    CDI kernel (pipeline.materialize_pass1(s2_cdi=True)), so the
-    driver compare proves kernel-composed == SQL-composed end-to-end.
+    CDI kernel (pipeline.materialize_pass1 of an s2_cdi SceneSpec), so
+    the driver compare proves kernel-composed == SQL-composed
+    end-to-end.
 
     Mechanically: the rendered pass-1 CTE is renamed pass1_raw, the
     CDI block runs over it, and ``pass1`` is redefined as pass1_raw

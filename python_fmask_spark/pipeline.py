@@ -14,18 +14,30 @@ all scalar math in whole-stage codegen. Only the genuinely spatial tail
 
 from __future__ import annotations
 
+import dataclasses
+import functools
+import hashlib
+import weakref
+from collections.abc import Callable
+from dataclasses import dataclass
+from typing import TYPE_CHECKING
+
 from pyspark.sql import DataFrame, SparkSession
 
+from . import constants as C
 from . import derive
 from .dialect import SPARK
-from .operators.scene import SCENE_OUT_SCHEMA, FmaskParams, classify_scene
+from .operators.scene import FmaskParams
 from .session import ensure_package_on_executors
+
+if TYPE_CHECKING:
+    from .sen2meta import Sen2TileMeta
 
 # Columns the scene kernel needs (everything else is pruned before the
 # shuffle — keep the exchanged bytes minimal).
 # text (and its sha256 digest) is NOT shuffled through the kernels —
 # the digest is joined back afterwards from the materialized pass-1
-# stage table (see text_digests), so byte-identity never rides the
+# stage table (see _ident), so byte-identity never rides the
 # Arrow exchange at all.
 _KERNEL_COLS = ("url", "cell_id", "r", "c", "nir", "bt",
                 "nullmask", "water_test", "snow", "cloud_raw",
@@ -41,116 +53,119 @@ _KERNEL_P1_COLS = ("url", "r", "c", "nir", "snow",
                    "sat_az_cdn", "sat_zen_cdn")
 
 
-def pass1_sql_text(table: str = "documents", sensor: str = "LANDSAT8",
-                   s2_offsets: dict[str, int] | None = None,
-                   tile_meta=None,
-                   nir_snow_thresh: float | None = None,
-                   green_snow_thresh: float | None = None) -> str:
-    """The rendered pass-1 SQL (features + pass1 CTEs). Also serves as
-    the logic component of resumable-stage fingerprints: any change to
-    the derive formulas, sensor dispatch, offsets, or the Eqn-20 snow
-    knobs changes this text and therefore invalidates StageRunner stage
-    tables."""
+@dataclass(frozen=True, eq=False)
+class SceneSpec:
+    """Everything the pass-1 leaf depends on: the registered input
+    view, the sensor regime (fmask/config.py:33-40), the Sentinel-2
+    radiometric offsets (mandatory for SENTINEL2, fmask/fmask.py:137-149),
+    the CDI displacement test (setSen2displacementTest,
+    fmask/config.py:388-394), the tile-XML angle grids
+    (sen2meta.Sen2TileMeta) and the Eqn-20 snow-test reflectance floors
+    (setEqn20NirSnowThresh / setEqn20GreenSnowThresh, CLI
+    --nirsnowthreshold / --greensnowthreshold, fmask/config.py:354-368;
+    applied fmask/fmask.py:452-453).
+
+    A leaf is named by what produced it: ``key`` hashes the rendered
+    pass-1 SQL plus the CDI flag, and every leaf view, session-cache
+    entry and StageRunner fingerprint derives from it. The offsets dict
+    and the grid's ndarrays are unhashable, so the dataclass itself is
+    never a key (``eq=False``: compare specs by ``key``); treat both as
+    immutable once the spec is built."""
+    table: str = "documents"
+    sensor: str = "LANDSAT8"
+    s2_offsets: dict[str, int] | None = None
+    s2_cdi: bool = False
+    tile_meta: Sen2TileMeta | None = None
+    nir_snow_thresh: float = C.EQN20_NIR_SNOW_THRESH
+    green_snow_thresh: float = C.EQN20_GREEN_SNOW_THRESH
+
+    @functools.cached_property
+    def key(self) -> str:
+        logic = f"{pass1_sql_text(self)}||cdi={self.s2_cdi}"
+        return hashlib.sha256(logic.encode()).hexdigest()[:16]
+
+
+def pass1_sql_text(spec: SceneSpec) -> str:
+    """The rendered pass-1 SQL (features + pass1 CTEs) of ``spec`` —
+    the identity behind ``SceneSpec.key``: any change to the derive
+    formulas, sensor dispatch, offsets, angle grid or snow floors
+    changes this text. Default-valued floors render the default text,
+    so an explicit default shares the default leaf."""
     p1_ctes = ",\n".join([
-        derive.features_sql(SPARK, derive.documents_wide_sql(SPARK, table),
-                            tile_meta=tile_meta),
-        derive.pass1_sql(SPARK, sensor=sensor, s2_offsets=s2_offsets,
-                         nir_snow_thresh=nir_snow_thresh,
-                         green_snow_thresh=green_snow_thresh),
+        derive.features_sql(
+            SPARK, derive.documents_wide_sql(SPARK, spec.table),
+            tile_meta=spec.tile_meta),
+        derive.pass1_sql(SPARK, sensor=spec.sensor,
+                         s2_offsets=spec.s2_offsets,
+                         nir_snow_thresh=spec.nir_snow_thresh,
+                         green_snow_thresh=spec.green_snow_thresh),
     ])
     return f"WITH {p1_ctes} SELECT * FROM pass1"
 
 
-def stage_fingerprint(spark: SparkSession, logic: str) -> str:
-    """Fingerprint for StageRunner stage tables: sha256 over the logic
-    identity (rendered SQL / params repr) PLUS the session's registered
-    input identity (sources.registered_input_identity — sf_dir +
-    per-file mtime/size). Resuming in the same workdir after either the
-    logic or the input data changed re-runs the stage instead of
-    silently reusing a stale table."""
-    import hashlib
-
+def stage_fingerprint(spark: SparkSession, spec: SceneSpec,
+                      params: FmaskParams | None = None,
+                      extra: str = "") -> str:
+    """The one StageRunner fingerprint: sha256 over the session's
+    registered input identity (sources.registered_input_identity —
+    sf_dir + per-file mtime/size), the spec key and, for every stage
+    past pass 1, the FmaskParams fields. ``extra`` folds in the plan of
+    a caller-built input frame. Resuming in the same workdir after the
+    logic, the params or the input data changed re-runs the stage
+    instead of silently reusing a stale table."""
     from .sources import registered_input_identity
-    ident = registered_input_identity(spark)
-    return hashlib.sha256(f"{ident}||{logic}".encode()).hexdigest()[:16]
+
+    logic = [registered_input_identity(spark), spec.key]
+    if params is not None:
+        logic.append(repr(dataclasses.astuple(params)))
+    logic.append(extra)
+    return hashlib.sha256("||".join(logic).encode()).hexdigest()[:16]
 
 
-def text_digests(spark: SparkSession, table: str = "documents") -> DataFrame:
-    """(url, text_sha256) — the byte-identity invariant, computed from
-    the materialized pass-1 stage table (a LogicalRDD leaf), NOT by
-    re-running the threshold/pass2/pass3 tail a second time."""
-    view = materialize_pass1(spark, table)
+def _ident(spark: SparkSession, view: str) -> DataFrame:
+    """(cell_id, r, c, url, text_sha256) off a materialized pass-1 leaf:
+    the identity + byte-identity digest every classify path joins back
+    JVM-side, so text never rides the kernels' exchanges."""
     return spark.sql(
-        f"SELECT url, sha2(text, 256) AS text_sha256 FROM {view}")
+        f"""SELECT cell_id, r, c, url, sha2(text, 256) AS text_sha256
+            FROM {view}""")
 
 
-def pass3_sql(table: str = "documents") -> str:
-    ctes = ",\n".join([
-        derive.features_sql(SPARK, derive.documents_wide_sql(SPARK, table)),
-        derive.pass1_sql(SPARK),
-        derive.thresholds_sql(SPARK),
-        derive.pass2_sql(SPARK),
-        derive.pass3_sql(SPARK),
-    ])
-    cols = ", ".join(_KERNEL_COLS)
-    return f"WITH {ctes} SELECT {cols} FROM pass3"
-
-
-# session -> {table: materialized view name}. The pass-1 stage table
-# is immutable for a given registered input, so every query in a session
-# shares ONE materialization (the reference's temp-raster reuse,
-# fmask/fmask.py:206-216); sources.register_views invalidates it when
-# the underlying input changes (including a rewrite of the parquet files
-# at the same path — the register identity folds in file mtimes/sizes).
-# WeakKeyDictionary on the session object: id(spark) integers can be
-# recycled after a session is garbage-collected.
-import weakref
-
-_PASS1_CACHE: "weakref.WeakKeyDictionary[SparkSession, dict[str, str]]" =     weakref.WeakKeyDictionary()
+# session -> names of its materialized leaf views. A leaf is immutable
+# for a given registered input, so every query in a session shares ONE
+# materialization per spec (the reference's temp-raster reuse,
+# fmask/fmask.py:206-216); sources.register_views invalidates the set
+# when the underlying input changes (including a rewrite of the parquet
+# files at the same path — the register identity folds in file
+# mtimes/sizes). WeakKeyDictionary on the session object: id(spark)
+# integers can be recycled after a session is garbage-collected.
+_PASS1_CACHE: "weakref.WeakKeyDictionary[SparkSession, set[str]]" = \
+    weakref.WeakKeyDictionary()
 
 
 def invalidate_pass1_cache(spark: SparkSession) -> None:
-    """Drop this session's materialized pass-1 views (called when the
+    """Drop this session's materialized leaf views (called when the
     registered input tables change underneath them)."""
-    for view in _PASS1_CACHE.pop(spark, {}).values():
+    for view in _PASS1_CACHE.pop(spark, set()):
         try:
             spark.catalog.dropTempView(view)
         except Exception:
             pass
 
 
-def _snow_skey(nir_snow_thresh: float | None,
-               green_snow_thresh: float | None) -> str:
-    """Cache-key/view-name suffix for non-default Eqn-20 snow knobs: a
-    knobbed pass-1 leaf must never alias the default one (the snow
-    column differs row-by-row)."""
-    if nir_snow_thresh is None and green_snow_thresh is None:
-        return ""
-    tag = f"_snow{nir_snow_thresh}x{green_snow_thresh}"
-    return (tag.replace(".", "p").replace("-", "m")
-            .replace("+", "e").replace("None", "d"))
+def _cached_leaf(spark: SparkSession, view: str,
+                 build: Callable[[], DataFrame]) -> str:
+    """Return ``view`` when this session already materialized it;
+    otherwise localCheckpoint ``build()`` behind that name first."""
+    cache = _PASS1_CACHE.setdefault(spark, set())
+    if view not in cache or not spark.catalog.tableExists(view):
+        build().localCheckpoint().createOrReplaceTempView(view)
+        cache.add(view)
+    return view
 
 
-def _offs_skey(s2_offsets: dict[str, int] | None) -> str:
-    """Cache-key/view-name suffix for non-zero Sentinel-2 radiometric
-    offsets: a leaf built with product-XML offsets must never alias the
-    zero-offset leaf (every reflectance differs row-by-row). Empty for
-    None/all-zero so the existing zero-offset view names are stable."""
-    if not s2_offsets or not any(s2_offsets.values()):
-        return ""
-    import hashlib
-    key = ",".join(f"{k}={s2_offsets[k]}" for k in sorted(s2_offsets))
-    return "_off" + hashlib.sha256(key.encode()).hexdigest()[:8]
-
-
-def materialize_pass1(spark: SparkSession, table: str = "documents",
-                      reuse: bool = True, runner=None,
-                      sensor: str = "LANDSAT8",
-                      s2_offsets: dict[str, int] | None = None,
-                      s2_cdi: bool = False,
-                      tile_meta=None,
-                      nir_snow_thresh: float | None = None,
-                      green_snow_thresh: float | None = None) -> str:
+def materialize_pass1(spark: SparkSession, spec: SceneSpec | None = None,
+                      runner=None) -> str:
     """Materialize pass 1 behind a leaf view and return the view name.
 
     Catalyst inlines deterministic CTEs per reference; the thresholds +
@@ -159,12 +174,9 @@ def materialize_pass1(spark: SparkSession, table: str = "documents",
     localCheckpoint truncates the lineage to a LogicalRDD leaf — the
     reference's own inter-pass temp-raster pattern
     (fmask/fmask.py:206-216 / SURVEY S12) — making every downstream plan
-    small and linear to optimize.
-
-    ``reuse=True`` returns the session's existing materialization when
-    the registered input hasn't changed (register_views invalidates on
-    change): the interim/classify/threshold queries all branch from the
-    same stage table instead of re-deriving pass 1 per query.
+    small and linear to optimize. The view is named by ``spec.key``, so
+    the interim/classify/threshold queries of one spec all branch from
+    the same stage table, and no two specs can alias one leaf.
 
     ``runner`` (a plans.lineage.StageRunner): write the materialization
     through a parquet/Iceberg stage table with lineage + fingerprint
@@ -172,71 +184,54 @@ def materialize_pass1(spark: SparkSession, table: str = "documents",
     executor memory/disk and dies with the session; a stage table
     survives restarts and makes classify resumable mid-pipeline). Both
     forms register the same leaf view name, so every downstream plan is
-    identical either way."""
-    skey = sensor + ("_cdi" if s2_cdi else "") \
-        + ("_grid" if tile_meta is not None else "") \
-        + _offs_skey(s2_offsets) \
-        + _snow_skey(nir_snow_thresh, green_snow_thresh)
-    suffix = "" if skey == "LANDSAT8" else f"_{skey.lower()}"
-    view = f"_pass1_mat_{table}{suffix}"
-    cache = _PASS1_CACHE.setdefault(spark, {})
-    if reuse and runner is None and cache.get((table, skey)) == view \
-            and spark.catalog.tableExists(view):
-        return view
-    if s2_cdi:
-        # The reference applies the CDI displacement test INSIDE pass 1
-        # when setSen2displacementTest is on (fmask/fmask.py:395-412):
-        # pcp becomes the CDI-filtered PCP and everything downstream
-        # (clear_land, the thresholds histograms, pass 2/3) consumes
-        # it. Build the raw S2 pass-1 leaf, run the per-cell CDI kernel
-        # over it, and replace pcp + its one dependent column.
-        from pyspark.sql import functions as F
-
-        from .sen2meta import require_s2_offsets
-        if sensor != "SENTINEL2":
-            raise ValueError("s2_cdi requires sensor='SENTINEL2' "
-                             "(fmask/config.py:388-394)")
-        offs = require_s2_offsets(s2_offsets)
-        ensure_package_on_executors(spark)
-        raw_view = materialize_pass1(spark, table, reuse=reuse,
-                                     sensor=sensor, s2_offsets=s2_offsets,
-                                     tile_meta=tile_meta,
-                                     nir_snow_thresh=nir_snow_thresh,
-                                     green_snow_thresh=green_snow_thresh)
-        kout = (spark.sql(
-            f"SELECT {_cdi_src_select(offs)} FROM {raw_view}")
-            .groupBy("cell_id").applyInPandas(
-                _cdi_kernel, schema=_CDI_OUT_SCHEMA)
-            .select("cell_id", "r", "c",
-                    F.expr("cast(pcp_final as boolean) AS _pcp_cdi")))
-        mod = (spark.table(raw_view)
-               .join(kout, ["cell_id", "r", "c"])
-               .withColumn("pcp", F.col("_pcp_cdi"))
-               .withColumn("clear_land", F.expr(
-                   "NOT nullmask AND NOT pcp AND NOT water_test"))
-               .drop("_pcp_cdi"))
-        mod.localCheckpoint().createOrReplaceTempView(view)
-        cache[(table, skey)] = view
-        return view
-    sql = pass1_sql_text(table, sensor=sensor, s2_offsets=s2_offsets,
-                         tile_meta=tile_meta,
-                         nir_snow_thresh=nir_snow_thresh,
-                         green_snow_thresh=green_snow_thresh)
-    if runner is not None:
-        fp = stage_fingerprint(spark, f"{table}:{sql}")
-        p1 = runner.run("pass1", fp, lambda: spark.sql(sql))
-        p1.createOrReplaceTempView(view)
-        # do NOT keep the session reuse cache pointing at this view: the
-        # stage table lives in the runner's workdir, whose lifetime the
-        # session does not control — a later cache hit would read a
-        # deleted parquet. Evicting forces the next plain call to
-        # rebuild its own localCheckpoint leaf.
-        cache.pop((table, skey), None)
-        return view
-    p1 = spark.sql(sql).localCheckpoint()
-    p1.createOrReplaceTempView(view)
-    cache[(table, skey)] = view
+    identical either way. The CDI-modified leaf is always a
+    localCheckpoint."""
+    spec = spec or SceneSpec()
+    view = f"_pass1_mat_{spec.table}_{spec.key}"
+    if spec.s2_cdi:
+        return _cached_leaf(spark, view, lambda: _cdi_pass1(spark, spec))
+    if runner is None:
+        return _cached_leaf(spark, view,
+                            lambda: spark.sql(pass1_sql_text(spec)))
+    sql = pass1_sql_text(spec)
+    runner.run("pass1", stage_fingerprint(spark, spec),
+               lambda: spark.sql(sql)).createOrReplaceTempView(view)
+    # do NOT keep the session reuse cache pointing at this view: the
+    # stage table lives in the runner's workdir, whose lifetime the
+    # session does not control — a later cache hit would read a
+    # deleted parquet. Evicting forces the next plain call to rebuild
+    # its own localCheckpoint leaf.
+    _PASS1_CACHE.get(spark, set()).discard(view)
     return view
+
+
+def _cdi_pass1(spark: SparkSession, spec: SceneSpec) -> DataFrame:
+    """The reference applies the CDI displacement test INSIDE pass 1
+    when setSen2displacementTest is on (fmask/fmask.py:395-412): pcp
+    becomes the CDI-filtered PCP and everything downstream (clear_land,
+    the thresholds histograms, pass 2/3) consumes it. Build the raw S2
+    pass-1 leaf, run the per-cell CDI kernel over it, and replace pcp +
+    its one dependent column."""
+    from pyspark.sql import functions as F
+
+    if spec.sensor != "SENTINEL2":
+        raise ValueError("s2_cdi requires sensor='SENTINEL2' "
+                         "(fmask/config.py:388-394)")
+    ensure_package_on_executors(spark)
+    raw_view = materialize_pass1(spark, dataclasses.replace(spec,
+                                                            s2_cdi=False))
+    kout = (spark.sql(
+        f"SELECT {_cdi_src_select(spec.s2_offsets)} FROM {raw_view}")
+        .groupBy("cell_id").applyInPandas(
+            _cdi_kernel, schema=_CDI_OUT_SCHEMA)
+        .select("cell_id", "r", "c",
+                F.expr("cast(pcp_final as boolean) AS _pcp_cdi")))
+    return (spark.table(raw_view)
+            .join(kout, ["cell_id", "r", "c"])
+            .withColumn("pcp", F.col("_pcp_cdi"))
+            .withColumn("clear_land", F.expr(
+                "NOT nullmask AND NOT pcp AND NOT water_test"))
+            .drop("_pcp_cdi"))
 
 
 # pass-1 columns the pass-2/pass-3 CTE formulas themselves consume
@@ -295,68 +290,45 @@ def tail_sql_from_pass1(pass1_view: str, upto: str, select: str,
     return f"WITH {ctes} {select}"
 
 
-def materialize_thresholds(spark: SparkSession, table: str = "documents",
-                           sensor: str = "LANDSAT8",
-                           s2_offsets: dict[str, int] | None = None,
-                           s2_cdi: bool = False,
-                           tile_meta=None,
-                           nir_snow_thresh: float | None = None,
-                           green_snow_thresh: float | None = None) -> str:
+def _thresholds_leaf(spark: SparkSession, spec: SceneSpec,
+                     pass1_view: Callable[[], str]) -> str:
+    """The session-cached thresholds leaf of ``spec``, built over the
+    pass-1 view ``pass1_view()`` names (called only on a cache miss)."""
+    return _cached_leaf(
+        spark, f"_thr_mat_{spec.table}_{spec.key}",
+        lambda: spark.sql(
+            f"WITH pass1 AS (SELECT * FROM {pass1_view()}), "
+            f"{derive.thresholds_sql(SPARK, sensor=spec.sensor)} "
+            f"SELECT * FROM thresholds"))
+
+
+def materialize_thresholds(spark: SparkSession,
+                           spec: SceneSpec | None = None) -> str:
     """Materialize the per-cell thresholds dim (rows == cells, tiny)
     behind a leaf view, session-cached like pass 1. Every tail consumer
     (pass2/pass3/dims) then references a leaf instead of re-analyzing
     the 6-window-function thresholds CTE."""
-    skey = sensor + ("_cdi" if s2_cdi else "") \
-        + ("_grid" if tile_meta is not None else "") \
-        + _offs_skey(s2_offsets) \
-        + _snow_skey(nir_snow_thresh, green_snow_thresh)
-    suffix = "" if skey == "LANDSAT8" else f"_{skey.lower()}"
-    view = f"_thr_mat_{table}{suffix}"
-    cache = _PASS1_CACHE.setdefault(spark, {})
-    key = ("thr", table, skey)
-    if cache.get(key) == view and spark.catalog.tableExists(view):
-        return view
-    p1view = materialize_pass1(spark, table, sensor=sensor,
-                               s2_offsets=s2_offsets, s2_cdi=s2_cdi,
-                               tile_meta=tile_meta,
-                               nir_snow_thresh=nir_snow_thresh,
-                               green_snow_thresh=green_snow_thresh)
-    sql = (f"WITH pass1 AS (SELECT * FROM {p1view}), "
-           f"{derive.thresholds_sql(SPARK, sensor=sensor)} "
-           f"SELECT * FROM thresholds")
-    spark.sql(sql).localCheckpoint().createOrReplaceTempView(view)
-    cache[key] = view
-    return view
+    spec = spec or SceneSpec()
+    return _thresholds_leaf(spark, spec,
+                            lambda: materialize_pass1(spark, spec))
 
 
-def pass3_df(spark: SparkSession, table: str = "documents",
-             sensor: str = "LANDSAT8",
-             s2_offsets: dict[str, int] | None = None,
-             s2_cdi: bool = False,
-             eqn17_cloud_prob_thresh: float | None = None,
-             nir_snow_thresh: float | None = None,
-             green_snow_thresh: float | None = None) -> DataFrame:
-    view = materialize_pass1(spark, table, sensor=sensor,
-                             s2_offsets=s2_offsets, s2_cdi=s2_cdi,
-                             nir_snow_thresh=nir_snow_thresh,
-                             green_snow_thresh=green_snow_thresh)
-    thr = materialize_thresholds(spark, table, sensor=sensor,
-                                 s2_offsets=s2_offsets, s2_cdi=s2_cdi,
-                                 nir_snow_thresh=nir_snow_thresh,
-                                 green_snow_thresh=green_snow_thresh)
+def pass3_df(spark: SparkSession, spec: SceneSpec | None = None,
+             eqn17_cloud_prob_thresh: float | None = None) -> DataFrame:
+    spec = spec or SceneSpec()
+    view = materialize_pass1(spark, spec)
+    thr = materialize_thresholds(spark, spec)
     cols = ", ".join(_KERNEL_COLS)
     return spark.sql(tail_sql_from_pass1(
-        view, "pass3", f"SELECT {cols} FROM pass3", sensor=sensor,
+        view, "pass3", f"SELECT {cols} FROM pass3", sensor=spec.sensor,
         thresholds_view=thr,
         eqn17_cloud_prob_thresh=eqn17_cloud_prob_thresh,
         pass1_cols=_KERNEL_P1_COLS))
 
 
-def interim_class_kernel(spark: SparkSession, table: str = "documents",
-                         params: FmaskParams | None = None,
-                         sensor: str = "LANDSAT8",
-                         s2_offsets: dict[str, int] | None = None,
-                         s2_cdi: bool = False) -> DataFrame:
+def interim_class_kernel(spark: SparkSession,
+                         spec: SceneSpec | None = None,
+                         params: FmaskParams | None = None) -> DataFrame:
     """Interim classification (no shadow chain) via the tiled-kernel path:
     pass3 columns -> ONE fused tile pass (3x3 majority + mask + circular
     dilation, halo = 1 + buffer radius) -> precedence CASE. Matches the
@@ -373,6 +345,7 @@ def interim_class_kernel(spark: SparkSession, table: str = "documents",
     from . import tiling
     from .operators import kernels
 
+    spec = spec or SceneSpec()
     params = params or FmaskParams()
     # persist: with_halo explodes its input — without a materialization
     # point Spark recomputes the whole pass-1..3 derivation per consumer.
@@ -381,11 +354,7 @@ def interim_class_kernel(spark: SparkSession, table: str = "documents",
     # stage then carries the whole pass-2/3 tail + dim broadcasts above
     # a Generate, defeating stage fusion; the narrow 8-column
     # checkpoint is the faster shape on repeat calls.)
-    p3 = pass3_df(spark, table, sensor=sensor, s2_offsets=s2_offsets,
-                  s2_cdi=s2_cdi,
-                  eqn17_cloud_prob_thresh=params.eqn17_cloud_prob_thresh,
-                  **params.snow_kwargs()
-                  ).select(
+    p3 = pass3_df(spark, spec, params.eqn17_cloud_prob_thresh).select(
         "url", "cell_id", "r", "c", "nullmask",
         "water_test", "snow", "cloud_raw").localCheckpoint()
 
@@ -416,13 +385,8 @@ def interim_class_kernel(spark: SparkSession, table: str = "documents",
             when snow then {4}
             when water_test then {5}
             else {1} end as int)""").alias("fmask_class"))
-    # same snow knobs -> reuses the leaf p3 already materialized
-    view = materialize_pass1(spark, table, sensor=sensor,
-                             s2_offsets=s2_offsets, s2_cdi=s2_cdi,
-                             **params.snow_kwargs())
-    ident = spark.sql(
-        f"""SELECT cell_id, r, c, url, sha2(text, 256) AS text_sha256
-            FROM {view}""")
+    # same spec -> reuses the leaf p3 already materialized
+    ident = _ident(spark, materialize_pass1(spark, spec))
     return (out.join(ident, ["cell_id", "r", "c"])
             .select("url", "cell_id", "r", "c", "cloud_raw", "cloud_m",
                     "clouddil", "nullmask", "water_test", "snow",
@@ -530,45 +494,70 @@ def s2_cdi_pcp(spark: SparkSession, table: str = "documents",
         _cdi_kernel, schema=_CDI_OUT_SCHEMA)
 
 
-def scene_exchange(spark: SparkSession, table: str = "documents",
-                   sensor: str = "LANDSAT8",
-                   s2_offsets: dict[str, int] | None = None,
-                   s2_cdi: bool = False,
-                   eqn17_cloud_prob_thresh: float | None = None,
-                   tile_meta=None,
-                   nir_snow_thresh: float | None = None,
-                   green_snow_thresh: float | None = None
-                   ) -> tuple[DataFrame, DataFrame]:
-    """The slim scene-kernel exchange: (pixel frame, per-cell dim frame).
+def classify(spark: SparkSession, spec: SceneSpec | None = None,
+             params: FmaskParams | None = None,
+             cells: DataFrame | None = None,
+             cells_mode: str = "semi",
+             runner=None) -> DataFrame:
+    """Full classification: returns (url, cell_id, r, c, fmask_class,
+    cloud_id, ..., text_sha256). ``spec.table`` must be a registered
+    view with the raw documents schema.
 
-    Pixel frame = 8 narrow fields (no url, booleans packed into one
-    tinyint, no repeated per-cell constants) — see
-    operators.scene.PX_EXCHANGE_SQL for the rationale and measurements.
-    Dim frame = 1 row per cell with the threshold + angle scalars,
-    built from the thresholds aggregate and a first()-per-cell pass
-    over the pass-1 leaf (both map-side-combine JVM aggregates)."""
-    from .operators.scene import DIM_COLS, PX_EXCHANGE_SQL
+    ``cells`` (a small DataFrame of cell_id) restricts the run to
+    (``cells_mode="semi"``) or excludes (``"anti"``) those cells via a
+    broadcast join — classify_auto uses this to split the workload.
 
-    view = materialize_pass1(spark, table, sensor=sensor,
-                             s2_offsets=s2_offsets, s2_cdi=s2_cdi,
-                             tile_meta=tile_meta,
-                             nir_snow_thresh=nir_snow_thresh,
-                             green_snow_thresh=green_snow_thresh)
-    thr = materialize_thresholds(spark, table, sensor=sensor,
-                                 s2_offsets=s2_offsets, s2_cdi=s2_cdi,
-                                 tile_meta=tile_meta,
-                                 nir_snow_thresh=nir_snow_thresh,
-                                 green_snow_thresh=green_snow_thresh)
-    px = spark.sql(tail_sql_from_pass1(
+    ``runner`` (a plans.lineage.StageRunner) is the materialization
+    hook: without one every frame stays a lazy plan; with one, pass 1,
+    the pixel frame, the dim frame, the identity dim and the final
+    classes each become a fingerprinted stage table with lineage, and a
+    restart in the same workdir skips every completed stage. Both forms
+    render the same SQL.
+
+    Plan shape: the per-cell kernel exchanges ONLY the slim pixel frame
+    (8 narrow fields, flags bit-packed — operators.scene.PX_EXCHANGE_SQL
+    has the rationale and measurements); the per-cell constants ride a
+    1-row-per-cell dim frame through cogroup, built from the thresholds
+    leaf and a first()-per-cell pass over the pass-1 leaf (both
+    map-side-combine JVM aggregates). url and the 64-byte text digest
+    (pure passthrough identity) join back JVM-side on (cell_id, r, c)
+    from the pass-1 leaf, so neither ever rides the groupBy sort that
+    was measured spilling 8.3 GB at 40.96M rows with the full-width row,
+    and the threshold/pass2/pass3 tail never re-derives text."""
+    from pyspark.sql import functions as F
+
+    from .operators.scene import (DIM_COLS, PX_EXCHANGE_SQL,
+                                  SCENE_OUT_SCHEMA_SLIM,
+                                  scene_cogroup_kernel)
+
+    spec = spec or SceneSpec()
+    params = params or FmaskParams()
+    if runner is not None and cells is not None:
+        raise ValueError("classify: cells= is not part of the stage "
+                         "fingerprint; run it without a runner")
+    ensure_package_on_executors(spark)
+    view = materialize_pass1(spark, spec, runner=runner)
+    fp = "" if runner is None else stage_fingerprint(spark, spec, params)
+
+    def stage(name: str, build: Callable[[], DataFrame]) -> DataFrame:
+        return build() if runner is None else runner.run(name, fp, build)
+
+    def thr() -> str:
+        if runner is None:
+            return materialize_thresholds(spark, spec)
+        # over the runner's staged pass-1 leaf, not a fresh checkpoint
+        return _thresholds_leaf(spark, spec, lambda: view)
+
+    px = stage("px", lambda: spark.sql(tail_sql_from_pass1(
         view, "pass3", f"SELECT {PX_EXCHANGE_SQL} FROM pass3",
-        sensor=sensor, thresholds_view=thr,
-        eqn17_cloud_prob_thresh=eqn17_cloud_prob_thresh,
+        sensor=spec.sensor, thresholds_view=thr(),
+        eqn17_cloud_prob_thresh=params.eqn17_cloud_prob_thresh,
         pass1_cols=("r", "c", "nir", "snow",
-                    "sat_az_cdn", "sat_zen_cdn")))
+                    "sat_az_cdn", "sat_zen_cdn"))))
     ang = ", ".join(f"first({k}) AS {k}" for k in DIM_COLS[3:])
     # both sides are per-cell (rows == cells); broadcast the aggregated
     # angle side so the dim frame needs no exchange+sort (guide §3.1)
-    dims = spark.sql(tail_sql_from_pass1(
+    dims = stage("dims", lambda: spark.sql(tail_sql_from_pass1(
         view, "thresholds",
         f"""SELECT /*+ BROADCAST(a) */ t.cell_id,
               cast(t.tlow as double) AS g_tlow,
@@ -579,75 +568,34 @@ def scene_exchange(spark: SparkSession, table: str = "documents",
             JOIN (SELECT cell_id, {ang}
                   FROM pass1 GROUP BY cell_id) a
               ON a.cell_id = t.cell_id""",
-        sensor=sensor, thresholds_view=thr))
-    return px, dims
-
-
-def classify(spark: SparkSession, table: str = "documents",
-             params: FmaskParams | None = None,
-             cells: DataFrame | None = None,
-             cells_mode: str = "semi",
-             sensor: str = "LANDSAT8",
-             s2_offsets: dict[str, int] | None = None,
-             s2_cdi: bool = False,
-             tile_meta=None) -> DataFrame:
-    """Full classification: returns (url, cell_id, r, c, fmask_class,
-    cloud_id, ..., text_sha256). ``table`` must be a registered view
-    with the raw documents schema.
-
-    ``cells`` (a small DataFrame of cell_id) restricts the run to
-    (``cells_mode="semi"``) or excludes (``"anti"``) those cells via a
-    broadcast join — classify_auto uses this to split the workload.
-
-    Plan shape: the per-cell kernel exchanges ONLY the slim pixel frame
-    (scene_exchange — 8 narrow fields, flags bit-packed, per-cell
-    constants cogrouped as a 1-row dim); url and the 64-byte text
-    digest (pure passthrough identity) join back JVM-side on
-    (cell_id, r, c) from the materialized pass-1 leaf, so neither ever
-    rides the groupBy sort that was measured spilling 8.3 GB at 40.96M
-    rows with the full-width row. The digest side reads the pass-1
-    leaf, so the threshold/pass2/pass3 tail never re-derives text."""
-    from .operators.scene import SCENE_OUT_SCHEMA_SLIM, scene_cogroup_kernel
-
-    from pyspark.sql import functions as F
-
-    params = params or FmaskParams()
-    ensure_package_on_executors(spark)
-    px, dims = scene_exchange(
-        spark, table, sensor=sensor, s2_offsets=s2_offsets, s2_cdi=s2_cdi,
-        eqn17_cloud_prob_thresh=params.eqn17_cloud_prob_thresh,
-        tile_meta=tile_meta, **params.snow_kwargs())
-    view = materialize_pass1(spark, table, sensor=sensor,
-                             s2_offsets=s2_offsets, s2_cdi=s2_cdi,
-                             tile_meta=tile_meta, **params.snow_kwargs())
-    ident = spark.sql(
-        f"""SELECT cell_id, r, c, url, sha2(text, 256) AS text_sha256
-            FROM {view}""")
+        sensor=spec.sensor, thresholds_view=thr())))
+    ident = stage("ident", lambda: _ident(spark, view))
     if cells is not None:
         how = "left_semi" if cells_mode == "semi" else "left_anti"
         px = px.join(F.broadcast(cells), "cell_id", how)
         dims = dims.join(F.broadcast(cells), "cell_id", how)
         ident = ident.join(F.broadcast(cells), "cell_id", how)
-    out = (px.groupBy("cell_id")
-           .cogroup(dims.groupBy("cell_id"))
-           .applyInPandas(
-               scene_cogroup_kernel(
-                   params, has_thermal=(sensor != "SENTINEL2")),
-               schema=SCENE_OUT_SCHEMA_SLIM))
-    return (out.join(ident, ["cell_id", "r", "c"])
-            .select("url", "cell_id", "r", "c", "fmask_class", "cloud_id",
-                    "cloud_height_du", "cloud_base_temp_c", "text_sha256"))
+
+    def final() -> DataFrame:
+        out = (px.groupBy("cell_id")
+               .cogroup(dims.groupBy("cell_id"))
+               .applyInPandas(
+                   scene_cogroup_kernel(
+                       params, has_thermal=(spec.sensor != "SENTINEL2")),
+                   schema=SCENE_OUT_SCHEMA_SLIM))
+        return (out.join(ident, ["cell_id", "r", "c"])
+                .select("url", "cell_id", "r", "c", "fmask_class",
+                        "cloud_id", "cloud_height_du", "cloud_base_temp_c",
+                        "text_sha256"))
+
+    return stage("final_class", final)
 
 
-def classify_auto(spark: SparkSession, table: str = "documents",
+def classify_auto(spark: SparkSession, spec: SceneSpec | None = None,
                   params: FmaskParams | None = None,
                   row_threshold: int = 2_000_000,
                   p3: DataFrame | None = None,
-                  digests: DataFrame | None = None,
-                  sensor: str = "LANDSAT8",
-                  s2_offsets: dict[str, int] | None = None,
-                  tile_meta=None,
-                  s2_cdi: bool = False) -> DataFrame:
+                  digests: DataFrame | None = None) -> DataFrame:
     """Cost-based per-cell dispatch between the whole-cell kernel and
     the clump-parallel distributed path (one entry point; mirrors RIOS
     picking the window grain, fmask/fmask.py:234).
@@ -675,6 +623,7 @@ def classify_auto(spark: SparkSession, table: str = "documents",
     from .operators.scene import SCENE_OUT_SCHEMA, classify_scene
     from .operators.scene_dist import classify_distributed
 
+    spec = spec or SceneSpec()
     params = params or FmaskParams()
     if p3 is not None:
         # pre-materialized pixel-table path (benchmarks / skew tests):
@@ -696,46 +645,33 @@ def classify_auto(spark: SparkSession, table: str = "documents",
             small_out = small_out.join(digests, "url")
         p3_big = p3.join(F.broadcast(big), "cell_id", "left_semi") \
             .localCheckpoint()
-        big_out = classify_distributed(spark, table, params,
-                                       p3=p3_big, digests=digests,
-                                       sensor=sensor,
-                                       s2_offsets=s2_offsets)
+        big_out = classify_distributed(spark, spec, params,
+                                       p3=p3_big, digests=digests)
         return small_out.unionByName(big_out.select(*small_out.columns))
 
-    view = materialize_pass1(spark, table, sensor=sensor,
-                             s2_offsets=s2_offsets, s2_cdi=s2_cdi,
-                             tile_meta=tile_meta,
-                             **params.snow_kwargs())
+    view = materialize_pass1(spark, spec)
     big_cells = (spark.table(view).groupBy("cell_id").count()
                  .filter(F.col("count") >= row_threshold)
                  .select("cell_id"))
     n_big = big_cells.count()
     if n_big == 0:
-        return classify(spark, table, params, sensor=sensor,
-                        s2_offsets=s2_offsets, s2_cdi=s2_cdi,
-                        tile_meta=tile_meta)
+        return classify(spark, spec, params)
     big = big_cells.localCheckpoint()
 
-    small_out = classify(spark, table, params, cells=big,
-                         cells_mode="anti", sensor=sensor,
-                         s2_offsets=s2_offsets, s2_cdi=s2_cdi,
-                         tile_meta=tile_meta)
+    small_out = classify(spark, spec, params, cells=big,
+                         cells_mode="anti")
 
-    thr = materialize_thresholds(spark, table, sensor=sensor,
-                                 s2_offsets=s2_offsets, s2_cdi=s2_cdi,
-                                 tile_meta=tile_meta,
-                                 **params.snow_kwargs())
+    thr = materialize_thresholds(spark, spec)
     cols = ", ".join((*_KERNEL_COLS, "cell_rows"))
     p3_big = (spark.sql(tail_sql_from_pass1(
-        view, "pass3", f"SELECT {cols} FROM pass3", sensor=sensor,
+        view, "pass3", f"SELECT {cols} FROM pass3", sensor=spec.sensor,
         thresholds_view=thr,
         eqn17_cloud_prob_thresh=params.eqn17_cloud_prob_thresh,
         pass1_cols=(*_KERNEL_P1_COLS, "cell_rows")))
         .join(F.broadcast(big), "cell_id", "left_semi")
         .localCheckpoint())
-    dig_big = text_digests(spark, table)
-    big_out = classify_distributed(spark, table, params,
-                                   p3=p3_big, digests=dig_big,
-                                   sensor=sensor, s2_offsets=s2_offsets,
-                                   tile_meta=tile_meta, s2_cdi=s2_cdi)
+    # digests off the leaf this spec already built
+    dig_big = _ident(spark, view).select("url", "text_sha256")
+    big_out = classify_distributed(spark, spec, params,
+                                   p3=p3_big, digests=dig_big)
     return small_out.unionByName(big_out.select(*small_out.columns))

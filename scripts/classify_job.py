@@ -65,9 +65,9 @@ def get_cmdargs(argv=None):
                         "Known gap: with --parallaxtest the CDI-"
                         "modified pass-1 frame itself is rebuilt on "
                         "resume (only the post-pass-1 stages are "
-                        "staged); correctness is unaffected — the cdi "
-                        "token in the stage fingerprint prevents stale "
-                        "aliasing")
+                        "staged); correctness is unaffected — every "
+                        "stage fingerprint folds in the scene spec's "
+                        "key, which covers the CDI flag")
     p.add_argument("-v", "--verbose", action="store_true",
                    help="Print per-stage progress to stderr")
     p.add_argument("--granule-xml", default="",
@@ -149,8 +149,6 @@ def params_from_cmdargs(cmdargs):
     kw = dict(
         min_cloud_size_px=cmdargs.mincloudsize,
         eqn17_cloud_prob_thresh=cmdargs.cloudprobthreshold / 100,
-        nir_snow_thresh=cmdargs.nirsnowthreshold,
-        green_snow_thresh=cmdargs.greensnowthreshold,
     )
     # explicit buffer flags override the preset/engine defaults; an
     # omitted flag (None) leaves the strict preset's 0/3 or the engine
@@ -163,20 +161,13 @@ def params_from_cmdargs(cmdargs):
     return base(**kw)
 
 
-def main() -> None:
-    cmdargs = get_cmdargs()
-    from pyspark.sql import SparkSession
+def spec_from_cmdargs(cmdargs):
+    """cmdargs -> pipeline.SceneSpec: everything pass 1 depends on —
+    the sensor, the S2 product/granule XML sources, --parallaxtest and
+    the Eqn-20 snow floors."""
+    from python_fmask_spark import oracle
+    from python_fmask_spark.pipeline import SceneSpec
 
-    spark = SparkSession.builder.appName("fmask-classify").getOrCreate()
-    from python_fmask_spark import oracle, pipeline
-    from python_fmask_spark.plans.lineage import StageRunner
-    from python_fmask_spark.plans.sinks import write_mask
-    from python_fmask_spark.sources import register_views
-
-    register_views(spark, cmdargs.sf_dir)
-    params = params_from_cmdargs(cmdargs)
-    if cmdargs.verbose:
-        print(f"params: {params}", file=sys.stderr)
     s2_offsets = None
     tile_meta = None
     if cmdargs.sensor == "SENTINEL2":
@@ -189,8 +180,27 @@ def main() -> None:
             s2_offsets = oracle.S2_ZERO_OFFSETS
         if cmdargs.granule_xml:
             tile_meta = sen2meta.Sen2TileMeta.from_file(cmdargs.granule_xml)
-    kw = dict(params=params, sensor=cmdargs.sensor, s2_offsets=s2_offsets,
-              tile_meta=tile_meta, s2_cdi=cmdargs.parallaxtest)
+    return SceneSpec(sensor=cmdargs.sensor, s2_offsets=s2_offsets,
+                     s2_cdi=cmdargs.parallaxtest, tile_meta=tile_meta,
+                     nir_snow_thresh=cmdargs.nirsnowthreshold,
+                     green_snow_thresh=cmdargs.greensnowthreshold)
+
+
+def main() -> None:
+    cmdargs = get_cmdargs()
+    from pyspark.sql import SparkSession
+
+    spark = SparkSession.builder.appName("fmask-classify").getOrCreate()
+    from python_fmask_spark import pipeline
+    from python_fmask_spark.plans.lineage import StageRunner
+    from python_fmask_spark.plans.sinks import write_mask
+    from python_fmask_spark.sources import register_views
+
+    register_views(spark, cmdargs.sf_dir)
+    params = params_from_cmdargs(cmdargs)
+    spec = spec_from_cmdargs(cmdargs)
+    if cmdargs.verbose:
+        print(f"params: {params}", file=sys.stderr)
     if cmdargs.tempdir and cmdargs.mode != "distributed":
         # stage-table resume is a distributed-path feature (classify /
         # classify_auto run stage-free whole-cell kernels); say so
@@ -198,15 +208,15 @@ def main() -> None:
         print(f"warning: --tempdir applies only to --mode distributed; "
               f"ignored for --mode {cmdargs.mode}", file=sys.stderr)
     if cmdargs.mode == "auto":
-        out = pipeline.classify_auto(spark, **kw)
+        out = pipeline.classify_auto(spark, spec, params)
     elif cmdargs.mode == "distributed":
         from python_fmask_spark.operators.scene_dist import (
             classify_distributed)
         runner = (StageRunner(spark, cmdargs.tempdir, run_id="cli")
                   if cmdargs.tempdir else None)
-        out = classify_distributed(spark, "documents", runner=runner, **kw)
+        out = classify_distributed(spark, spec, params, runner=runner)
     else:
-        out = pipeline.classify(spark, **kw)
+        out = pipeline.classify(spark, spec, params)
     sink_fmt = ""
     if cmdargs.output:
         sink_fmt = write_mask(out, cmdargs.output)

@@ -10,9 +10,11 @@ import duckdb
 
 sys.path.insert(0, "/root/repo")
 
+from python_fmask_spark import constants as C  # noqa: E402
 from python_fmask_spark import oracle, pipeline  # noqa: E402
 from python_fmask_spark.dialect import DUCKDB, SPARK  # noqa: E402
 from python_fmask_spark.operators.scene import FmaskParams  # noqa: E402
+from python_fmask_spark.pipeline import SceneSpec  # noqa: E402
 from python_fmask_spark.sources import register_views  # noqa: E402
 
 
@@ -86,8 +88,9 @@ def test_strict_preset_mirrors_reference(spark, sf_oracle):
 
 
 def _snow_counts(spark, nir=None, green=None):
-    view = pipeline.materialize_pass1(spark, nir_snow_thresh=nir,
-                                      green_snow_thresh=green)
+    spec = SceneSpec() if nir is None else SceneSpec(
+        nir_snow_thresh=nir, green_snow_thresh=green)
+    view = pipeline.materialize_pass1(spark, spec)
     df = spark.sql(f"""SELECT cell_id,
         cast(sum(case when snow then 1 else 0 end) as bigint) AS n_snow
         FROM {view} GROUP BY cell_id""")
@@ -125,21 +128,21 @@ def test_snow_thresh_flows_into_classification(spark, sf_oracle):
     non-default knob gets its OWN pass-1 leaf (no cache aliasing)."""
     register_views(spark, sf_oracle)
 
-    def n_snow_class(params):
-        df = pipeline.interim_class_kernel(spark, params=params)
+    knob = SceneSpec(nir_snow_thresh=2.0, green_snow_thresh=2.0)
+
+    def n_snow_class(spec):
+        df = pipeline.interim_class_kernel(spark, spec)
         return df.filter("fmask_class = 4").count()
 
-    base = n_snow_class(FmaskParams())
-    none = n_snow_class(FmaskParams(nir_snow_thresh=2.0,
-                                    green_snow_thresh=2.0))
+    base = n_snow_class(SceneSpec())
+    none = n_snow_class(knob)
     assert base > 0 and none == 0
-    # default-valued explicit knobs normalize to the shared leaf
-    assert FmaskParams().snow_kwargs() == {"nir_snow_thresh": None,
-                                           "green_snow_thresh": None}
+    # explicit default floats render the default SQL -> the shared leaf
     v_def = pipeline.materialize_pass1(spark)
-    v_knob = pipeline.materialize_pass1(spark, nir_snow_thresh=2.0,
-                                        green_snow_thresh=2.0)
-    assert v_def != v_knob
+    explicit = SceneSpec(nir_snow_thresh=float(C.EQN20_NIR_SNOW_THRESH),
+                         green_snow_thresh=float(C.EQN20_GREEN_SNOW_THRESH))
+    assert pipeline.materialize_pass1(spark, explicit) == v_def
+    assert pipeline.materialize_pass1(spark, knob) != v_def
 
 
 def test_cli_params_mirror_reference_conversions():
@@ -148,18 +151,22 @@ def test_cli_params_mirror_reference_conversions():
     metres -> pixels via x_res; --strict preserves the preset buffers
     unless explicitly overridden."""
     sys.path.insert(0, "/root/repo/scripts")
-    from classify_job import get_cmdargs, params_from_cmdargs
+    from classify_job import (get_cmdargs, params_from_cmdargs,
+                              spec_from_cmdargs)
 
-    p = params_from_cmdargs(get_cmdargs(
+    args = get_cmdargs(
         ["sf", "--cloudprobthreshold", "22.5",
          "--cloudbufferdistance", "150", "--shadowbufferdistance", "300",
          "--nirsnowthreshold", "0.13", "--greensnowthreshold", "0.12",
-         "--mincloudsize", "8"]))
+         "--mincloudsize", "8"])
+    p = params_from_cmdargs(args)
     assert p.eqn17_cloud_prob_thresh == 0.225
     assert p.cloud_buffer_px == int(150 / p.x_res)
     assert p.shadow_buffer_px == int(300 / p.x_res)
-    assert (p.nir_snow_thresh, p.green_snow_thresh) == (0.13, 0.12)
     assert p.min_cloud_size_px == 8
+    # the snow floors change pass 1, so they land on the scene spec
+    spec = spec_from_cmdargs(args)
+    assert (spec.nir_snow_thresh, spec.green_snow_thresh) == (0.13, 0.12)
 
     strict = params_from_cmdargs(get_cmdargs(["sf", "--strict"]))
     assert (strict.cloud_buffer_px, strict.shadow_buffer_px) == (0, 3)

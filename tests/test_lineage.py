@@ -7,8 +7,11 @@ import tempfile
 
 sys.path.insert(0, "/root/repo")
 
-from python_fmask_spark.plans.lineage import StageRunner, classify_checkpointed  # noqa: E402
+from python_fmask_spark import pipeline  # noqa: E402
+from python_fmask_spark.plans.lineage import StageRunner  # noqa: E402
 from python_fmask_spark.sources import register_views  # noqa: E402
+
+CLASSIFY_STAGES = {"pass1", "px", "dims", "ident", "final_class"}
 
 
 def test_stage_runner_resume(spark, sf_small):
@@ -36,19 +39,52 @@ def test_stage_runner_resume(spark, sf_small):
         assert all(r.max_partition_rows >= r.median_partition_rows for r in lin)
 
 
-def test_classify_checkpointed_resume(spark, sf_small):
-    from python_fmask_spark import pipeline
-
+def test_classify_staged_resume(spark, sf_small):
+    """classify(runner=...) stages pass 1, the pixel/dim/identity
+    frames and the final classes; a second run in the same workdir
+    resumes every stage and returns identical rows, equal bit-for-bit
+    to the live (runner-free) plan."""
     register_views(spark, sf_small)
     with tempfile.TemporaryDirectory() as wd:
-        out1 = classify_checkpointed(spark, "documents", wd).collect()
+        r1 = StageRunner(spark, wd, "c1")
+        out1 = pipeline.classify(spark, runner=r1).collect()
+        assert {r.stage for r in r1.lineage().collect()} == CLASSIFY_STAGES
         # second run resumes from the final stage table: identical rows
-        out2 = classify_checkpointed(spark, "documents", wd).collect()
+        r2 = StageRunner(spark, wd, "c2")
+        out2 = pipeline.classify(spark, runner=r2).collect()
+        assert r2.lineage().filter("run_id = 'c2'").count() == 0
         assert sorted(map(tuple, out1)) == sorted(map(tuple, out2))
         assert len(out1) == 500
         # and the staged plan equals the live pipeline bit-for-bit
         live = pipeline.classify(spark).collect()
         assert sorted(map(tuple, out1)) == sorted(map(tuple, live))
+
+
+def test_classify_resume_reruns_on_rewritten_input(spark, sf_small,
+                                                    tmp_path):
+    """Rewriting the input parquet at the SAME path and re-registering
+    it must re-run every classify stage on resume: each stage
+    fingerprint folds in the registered input identity, so the px /
+    dims / ident / final_class tables of the old input are never read
+    back over the new one."""
+    import pyarrow.parquet as pq
+
+    src = tmp_path / "in"
+    src.mkdir()
+    docs = pq.read_table(f"{sf_small}/documents.parquet")
+    pq.write_table(docs, src / "documents.parquet")
+    wd = str(tmp_path / "wd")
+    register_views(spark, str(src), tables=("documents",))
+    assert pipeline.classify(
+        spark, runner=StageRunner(spark, wd, "full")).count() == 500
+
+    pq.write_table(docs.slice(0, 250), src / "documents.parquet")
+    register_views(spark, str(src), tables=("documents",))
+    r2 = StageRunner(spark, wd, "half")
+    assert pipeline.classify(spark, runner=r2).count() == 250
+    rerun = {r.stage for r in r2.lineage()
+             .filter("run_id = 'half'").collect()}
+    assert rerun == CLASSIFY_STAGES
 
 
 def test_runner_fingerprint_covers_params(spark, sf_small):

@@ -387,3 +387,32 @@ SELECT * FROM (VALUES
     assert df["commonness_micro"].isna().all()
     assert (df["oov_micro"] == 1000000).all()
     assert (df["hit_mass"] == 0).all()
+
+
+def test_ivf_frame_empty_centroid_sample_matches_oracle(spark):
+    """A corpus whose md5 sample seeds no IVF centroid: ann_ivf_frame
+    returns the empty result frame itself (no SQL fallback), equal to
+    the DuckDB q_ann_ivf oracle on the same table — both empty, same
+    columns."""
+    from python_fmask_spark.dialect import md5_slice_int
+    from python_fmask_spark.functions import similarity as S
+
+    con = duckdb.connect()
+    ch = md5_slice_int("concat('ivf_', cast(vec_id as varchar))", 1, 4,
+                       DUCKDB)
+    pdf = con.execute(
+        f"""SELECT * FROM read_parquet(
+              '/root/testdata/sf0.01/embeddings.parquet')
+            WHERE ({ch}) % {S.IVF_CENTROID_MOD} <> 0
+            ORDER BY vec_id LIMIT 40""").df()
+    con.register("emb_df", pdf)
+    con.execute("CREATE VIEW embeddings AS SELECT * FROM emb_df")
+    want = con.execute(S.q_ann_ivf(DUCKDB)).df()
+
+    pdf["embedding"] = pdf["embedding"].map(lambda a: [float(x) for x in a])
+    spark.createDataFrame(
+        pdf, "vec_id bigint, embedding array<float>, label int"
+    ).createOrReplaceTempView("embeddings")
+    got = S.ann_ivf_frame(spark).toPandas()
+    assert len(pdf) == 40 and want.empty and got.empty
+    assert list(got.columns) == list(want.columns)

@@ -13,8 +13,12 @@ import numpy as np
 sys.path.insert(0, "/root/repo")
 
 from python_fmask_spark import pipeline  # noqa: E402
+from python_fmask_spark import oracle  # noqa: E402
 from python_fmask_spark.operators.scene_dist import classify_distributed  # noqa: E402
+from python_fmask_spark.pipeline import SceneSpec  # noqa: E402
 from python_fmask_spark.sources import register_views  # noqa: E402
+
+S2 = SceneSpec(sensor="SENTINEL2", s2_offsets=oracle.S2_ZERO_OFFSETS)
 
 COLS = ["url", "fmask_class", "cloud_id", "cloud_height_du",
         "cloud_base_temp_c", "text_sha256"]
@@ -127,14 +131,9 @@ def test_distributed_s2_no_thermal_matches_scene_kernel(spark, sf_small):
     (sensor=SENTINEL2) — flat clouds, Tcloudbase=0 sweeps, NaN base
     temps, NULL BT thresholds — must match pipeline.classify's
     no-thermal output bit-for-bit."""
-    from python_fmask_spark import oracle
-
     register_views(spark, sf_small)
-    offs = oracle.S2_ZERO_OFFSETS
-    whole = _canon(pipeline.classify(spark, sensor="SENTINEL2",
-                                     s2_offsets=offs))
-    dist = _canon(classify_distributed(spark, sensor="SENTINEL2",
-                                       s2_offsets=offs))
+    whole = _canon(pipeline.classify(spark, S2))
+    dist = _canon(classify_distributed(spark, S2))
     assert whole.keys() == dist.keys()
     diffs = {u: (whole[u], dist[u]) for u in whole if whole[u] != dist[u]}
     assert not diffs, f"{len(diffs)} mismatching urls, e.g. " \
@@ -189,8 +188,9 @@ def test_distributed_l47_matches_scene_kernel(spark, sf_small):
     L47 chain is pinned against its independent-replay fixture by the
     fmask_final_class_l47 driver row)."""
     register_views(spark, sf_small)
-    whole = _canon(pipeline.classify(spark, sensor="LANDSAT47"))
-    dist = _canon(classify_distributed(spark, sensor="LANDSAT47"))
+    l47 = SceneSpec(sensor="LANDSAT47")
+    whole = _canon(pipeline.classify(spark, l47))
+    dist = _canon(classify_distributed(spark, l47))
     assert whole.keys() == dist.keys()
     diffs = {u: (whole[u], dist[u]) for u in whole if whole[u] != dist[u]}
     assert not diffs, f"{len(diffs)} mismatching urls, e.g. " \
@@ -206,23 +206,45 @@ def test_distributed_s2_cdi_matches_scene_kernel(spark, sf_small):
     matrix: {L8, S2, S2+CDI, L47} x {whole-cell, distributed}. The
     CDI filter must also be LIVE on this fixture (some PCP pixel
     flips vs plain S2), or the test would pass vacuously."""
-    from python_fmask_spark import oracle
+    import dataclasses
 
     register_views(spark, sf_small)
-    offs = oracle.S2_ZERO_OFFSETS
-    whole = _canon(pipeline.classify(spark, sensor="SENTINEL2",
-                                     s2_offsets=offs, s2_cdi=True))
-    dist = _canon(classify_distributed(spark, sensor="SENTINEL2",
-                                       s2_offsets=offs, s2_cdi=True))
+    s2_cdi = dataclasses.replace(S2, s2_cdi=True)
+    whole = _canon(pipeline.classify(spark, s2_cdi))
+    dist = _canon(classify_distributed(spark, s2_cdi))
     assert whole.keys() == dist.keys()
     diffs = {u: (whole[u], dist[u]) for u in whole if whole[u] != dist[u]}
     assert not diffs, f"{len(diffs)} mismatching urls, e.g. " \
         f"{list(diffs.items())[:3]}"
-    v_raw = pipeline.materialize_pass1(spark, sensor="SENTINEL2",
-                                       s2_offsets=offs)
-    v_cdi = pipeline.materialize_pass1(spark, sensor="SENTINEL2",
-                                       s2_offsets=offs, s2_cdi=True)
+    v_raw = pipeline.materialize_pass1(spark, S2)
+    v_cdi = pipeline.materialize_pass1(spark, s2_cdi)
     n_flip = spark.sql(
         f"""SELECT count(*) AS n FROM {v_raw} a JOIN {v_cdi} b
             USING (cell_id, r, c) WHERE a.pcp <> b.pcp""").first().n
     assert n_flip > 0, "CDI filter inert on this fixture"
+
+
+def test_s2_distributed_builds_no_default_leaf(spark, sf_small):
+    """The byte-identity digests of an S2 distributed classify come off
+    the S2 leaf it already built: no default-spec (LANDSAT8) pass-1
+    leaf is materialized beside it, with or without a StageRunner."""
+    import tempfile
+
+    from python_fmask_spark.plans.lineage import StageRunner
+
+    default_leaf = f"_pass1_mat_documents_{SceneSpec().key}"
+    register_views(spark, sf_small)
+    pipeline.invalidate_pass1_cache(spark)
+    assert classify_distributed(spark, S2).count() == 500
+    leaves = pipeline._PASS1_CACHE[spark]
+    assert leaves and all(S2.key in v for v in leaves), leaves
+    assert not spark.catalog.tableExists(default_leaf)
+
+    pipeline.invalidate_pass1_cache(spark)
+    with tempfile.TemporaryDirectory() as wd:
+        out = classify_distributed(spark, S2,
+                                   runner=StageRunner(spark, wd, "s2"))
+        assert out.count() == 500
+    assert not any(SceneSpec().key in v
+                   for v in pipeline._PASS1_CACHE.get(spark, ()))
+    assert not spark.catalog.tableExists(default_leaf)

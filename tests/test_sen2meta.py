@@ -5,6 +5,7 @@ fmask/cmdline/sentinel2Stacked.py:318-341."""
 
 from __future__ import annotations
 
+import dataclasses
 import sys
 
 import numpy as np
@@ -203,17 +204,42 @@ def test_tile_meta_reaches_classify(spark):
 
     m = sen2meta.Sen2TileMeta.from_file(TILE_XML)
     register_views(spark, "/root/testdata/sf0.001")
-    vg = pipeline.materialize_pass1(spark, sensor="SENTINEL2",
-                                    s2_offsets=S2_ZERO_OFFSETS,
-                                    tile_meta=m)
-    vs = pipeline.materialize_pass1(spark, sensor="SENTINEL2",
-                                    s2_offsets=S2_ZERO_OFFSETS)
+    syn = pipeline.SceneSpec(sensor="SENTINEL2", s2_offsets=S2_ZERO_OFFSETS)
+    spec = dataclasses.replace(syn, tile_meta=m)
+    vg = pipeline.materialize_pass1(spark, spec)
+    vs = pipeline.materialize_pass1(spark, syn)
     assert vg != vs  # separate session-cache leaves
     grid = spark.sql(f"SELECT url, sat_az_cdn FROM {vg}").toPandas()
     syn = spark.sql(f"SELECT url, sat_az_cdn FROM {vs}").toPandas()
     mrg = grid.merge(syn, on="url", suffixes=("_g", "_s"))
     assert (mrg.sat_az_cdn_g != mrg.sat_az_cdn_s).any()
     # full chain runs under the grid leaf and returns every pixel
-    out = pipeline.classify(spark, sensor="SENTINEL2",
-                            s2_offsets=S2_ZERO_OFFSETS, tile_meta=m)
+    out = pipeline.classify(spark, spec)
     assert out.count() == spark.table(vg).count()
+
+
+def test_two_tile_grids_get_two_leaves(spark):
+    """Two different tile-XML grids in one session name two different
+    pass-1 leaves (the leaf key hashes the rendered SQL, which inlines
+    the grid values), and each leaf carries its own grid's angles."""
+    from python_fmask_spark import pipeline
+    from python_fmask_spark.oracle import S2_ZERO_OFFSETS
+    from python_fmask_spark.sources import register_views
+
+    m1 = sen2meta.Sen2TileMeta.from_file(TILE_XML)
+    m2 = dataclasses.replace(m1, sun_zenith_grid=m1.sun_zenith_grid + 10.0)
+    register_views(spark, "/root/testdata/sf0.001")
+    s1 = pipeline.SceneSpec(sensor="SENTINEL2", s2_offsets=S2_ZERO_OFFSETS,
+                            tile_meta=m1)
+    s2 = dataclasses.replace(s1, tile_meta=m2)
+    v1 = pipeline.materialize_pass1(spark, s1)
+    v2 = pipeline.materialize_pass1(spark, s2)
+    assert v1 != v2
+
+    def sun_zen(src):
+        return spark.sql(f"SELECT sum(sun_zen) FROM {src}").first()[0]
+
+    assert sun_zen(v1) != pytest.approx(sun_zen(v2))
+    for spec, view in ((s1, v1), (s2, v2)):
+        fresh = sun_zen(f"({pipeline.pass1_sql_text(spec)})")
+        assert sun_zen(view) == pytest.approx(fresh)
